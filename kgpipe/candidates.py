@@ -58,10 +58,6 @@ def with_normalized_mention(df: DataFrame, text_col: str = "text") -> DataFrame:
     UDF for every row anyway. (Measured: the UDF stage was the single
     most expensive stage of the whole pipeline on an ASCII corpus —
     ~67% of one pipeline run's task time.)"""
-    import os
-
-    if os.environ.get("KGPIPE_NO_ASCII_FAST"):  # A/B measurement toggle
-        return df.withColumn("norm_mention", normalize_mention_udf(F.col(text_col)))
     is_ascii = F.col(text_col).rlike(_ASCII_RE)
     fast = df.filter(is_ascii).withColumn("norm_mention", F.col(text_col))
     slow = df.filter(~is_ascii).withColumn(

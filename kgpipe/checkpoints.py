@@ -149,15 +149,19 @@ def resume_stage(
     checkpoint_path: str,
     stage: str,
     compute,
-    key: str = "mention_id",
+    key: str | list = "mention_id",
 ) -> DataFrame:
     """Idempotent stage execution: compute(work \\ done) ∪ done.
 
-    `compute` maps the pending subset to the stage output. Completed
-    keys are never recomputed (anti-join); the merged set is committed
-    with ONE write + one atomic manifest swap, so a killed run restarts
-    where it stopped (J9) and a crash mid-merge keeps the previous
-    version readable.
+    `compute` maps the pending subset to the stage output; `key` (a
+    column or a list of columns) identifies a unit of work in both.
+    Completed keys are never recomputed (anti-join); the merged set is
+    committed with ONE write + one atomic manifest swap, so a killed
+    run restarts where it stopped (J9) and a crash mid-merge keeps the
+    previous version readable. When the pending keys yield no output
+    rows (e.g. turns without a mention) nothing is committed and the
+    current version is returned, so a rerun over unchanged input writes
+    no new version.
     """
     spark = work.sparkSession
     done = load_stage(spark, checkpoint_path)
@@ -169,6 +173,8 @@ def resume_stage(
     if pending.isEmpty():
         return done
     fresh = compute(pending)
+    if fresh.isEmpty():
+        return done
     merged = done.unionByName(fresh, allowMissingColumns=True)
     commit_stage(merged, checkpoint_path, stage)
     return load_stage(spark, checkpoint_path)

@@ -56,9 +56,9 @@ def acceptance_decisions(
     per mention_id): accepted_qid, accepted_lang, wikidata_summary,
     wikidata_arguments, arg_pairs, wikipedia_title, wikipedia_summary.
 
-    Split out from accept_and_enrich so callers can materialize it
-    before the fold-back join — the fused decision+join plan degrades
-    ~3× at high parallelism (same pathology as the linking stage, see
+    A frame of its own so callers can materialize it before the
+    fold-back join — the fused decision+join plan degrades ~3× at high
+    parallelism (same pathology as the linking stage, see
     pipeline.py)."""
     if language == "multi":  # get_wikidata.py:355-359
         language = "en"
@@ -183,7 +183,7 @@ def attach_predictions_and_decisions(mentions: DataFrame,
     in the r6 shape its ["Q0"] sentinel rode INTO acceptance_decisions,
     where Q0 (never in kb_context) produced exactly the constant
     decision row (acc NULL → sentinel summaries/titles, empty argument
-    arrays). Those constants are re-added here via coalesce, so feeding
+    arrays). Those constants are re-added here on the NULL rows, so feeding
     acceptance_decisions the slim frame (which simply lacks those
     mentions) yields an identical enriched table — row-for-row
     (equivalence pytest + q25 oracle hash).
@@ -192,18 +192,14 @@ def attach_predictions_and_decisions(mentions: DataFrame,
     attach_decisions reason (the decisions/prediction builds must not
     be driver-broadcast at corpus scale; per-mention rows stream).
 
-    The sentinel literals ride inside when(true, …) so the coalesced
-    columns stay NULLABLE — bit-identical schema (not just values) to
-    the r6 shape, whose decision columns came out of a left join."""
-    def _n(c):  # keep nullable=True like the r6 left-join columns
-        # (schema-identical, not just value-identical). A foldable
-        # always-true guard gets simplified away by the analyzer, so
-        # the condition references a non-null column: length() of a
-        # concat_ws is ≥ 0 on every row, the branch always fires, and
-        # CaseWhen-without-else stays nullable. Coalesce evaluates
-        # lazily, so the guard only runs on the sentinel rows.
-        return F.when(
-            F.length(F.concat_ws("", F.col("mention_id"))) >= 0, c)
+    The sentinels fill only the NULL rows of each left-join column,
+    through when(col IS NULL, sentinel).otherwise(col): the CASE takes
+    its nullability from the nullable join column itself, so the
+    decision columns stay NULLABLE — bit-identical schema (not just
+    values) to the r6 shape, whose decision columns came out of a left
+    join — without depending on what the optimizer folds."""
+    def _fill(name, sentinel):
+        return F.when(F.col(name).isNull(), sentinel).otherwise(F.col(name))
 
     return (
         mentions
@@ -212,36 +208,17 @@ def attach_predictions_and_decisions(mentions: DataFrame,
         .withColumn("genre_prediction",
                     F.coalesce("genre_prediction", F.array(F.lit(Q0))))
         .withColumn("wikidata_summary",
-                    F.coalesce("wikidata_summary",
-                               _n(F.lit(NO_WIKIDATA_SUMMARY))))
+                    _fill("wikidata_summary", F.lit(NO_WIKIDATA_SUMMARY)))
         .withColumn("wikidata_arguments",
-                    F.coalesce("wikidata_arguments",
-                               _n(F.array().cast("array<string>"))))
+                    _fill("wikidata_arguments",
+                          F.array().cast("array<string>")))
         .withColumn("arg_pairs",
-                    F.coalesce("arg_pairs", _n(F.expr("array()").cast(
-                        "array<struct<prop:string,label:string>>"))))
+                    _fill("arg_pairs", F.expr("array()").cast(
+                        "array<struct<prop:string,label:string>>")))
         .withColumn("wikipedia_title",
-                    F.coalesce("wikipedia_title",
-                               _n(F.lit(NO_WIKIPEDIA_TITLE))))
+                    _fill("wikipedia_title", F.lit(NO_WIKIPEDIA_TITLE)))
         .withColumn("wikipedia_summary",
-                    F.coalesce("wikipedia_summary",
-                               _n(F.lit(NO_WIKIPEDIA_SUMMARY))))
+                    _fill("wikipedia_summary", F.lit(NO_WIKIPEDIA_SUMMARY)))
         .withColumn("link_qid", F.coalesce("accepted_qid", F.lit(Q0)))
     )
 
-
-def accept_and_enrich(
-    linked: DataFrame,
-    kb_context: DataFrame,
-    wiki_summaries: DataFrame,
-    language: str = "en",
-    summaries_dim: DataFrame | None = None,
-) -> DataFrame:
-    """linked(mention_id, genre_prediction, ...) → + (link_qid,
-    accepted_qid, accepted_lang, wikidata_summary, wikidata_arguments,
-    wikipedia_title, wikipedia_summary). Composition of
-    acceptance_decisions + attach_decisions."""
-    return attach_decisions(
-        linked, acceptance_decisions(linked, kb_context, wiki_summaries,
-                                     language, summaries_dim=summaries_dim)
-    )

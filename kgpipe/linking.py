@@ -279,45 +279,3 @@ def predictions_per_mention(mentions: DataFrame, ranked: DataFrame) -> DataFrame
         )
     )
 
-
-def link_mentions(mentions: DataFrame, candidates: DataFrame,
-                  title_map: DataFrame, beam: int = DEFAULT_BEAM,
-                  lenpen: float = MARGINALIZE_LENPEN) -> DataFrame:
-    """Full linking stage: candidates → scored hypotheses → marginalize
-    → ranked predictions folded back onto mentions. Marginalization runs
-    slim (details=False): this composition consumes only (rank, qid)."""
-    hyps = score_hypotheses(candidates, mentions, title_map, beam=beam)
-    ranked = marginalize(hyps, lenpen=lenpen, details=False)
-    return predictions_per_mention(mentions, ranked)
-
-
-def link_mentions_fast(mentions: DataFrame, mention_counts: DataFrame,
-                       title_map: DataFrame, beam: int = DEFAULT_BEAM,
-                       lenpen: float = MARGINALIZE_LENPEN,
-                       max_candidates: int = 8) -> DataFrame:
-    """Single-shuffle linking variant: repartition the mention stream
-    ONCE on its unique mention_id; candidate attachment (broadcast
-    array probe), hypothesis explode+broadcast-title join, beam-cap
-    window, per-QID marginalization, rank window and fold-back join
-    are all satisfied by hash(mention_id) — no further exchanges.
-    Identical output to generate_candidates+link_mentions.
-
-    MEASURED CAVEAT: despite the minimal shuffle count, this is ~7×
-    slower than the row-based path on local[8] — the interpreted
-    higher-order array expressions in attach_candidates dominate and
-    get re-inlined per downstream consumer. Kept as the
-    shuffle-minimal reference plan (it wins only when shuffle IO, not
-    CPU, is the bottleneck); the pipeline uses the row-based path.
-    """
-    from kgpipe.candidates import attach_candidates
-
-    m_r = mentions.repartition("mention_id")
-    with_cands = attach_candidates(m_r, mention_counts,
-                                   max_candidates=max_candidates)
-    cand_rows = with_cands.select(
-        "mention_id", F.explode("candidates").alias("c")
-    ).select("mention_id", F.col("c.qid").alias("qid"),
-             F.col("c.cnt").alias("cnt"))
-    hyps = score_hypotheses(cand_rows, m_r, title_map, beam=beam)
-    ranked = marginalize(hyps, lenpen=lenpen, details=False)
-    return predictions_per_mention(m_r, ranked)

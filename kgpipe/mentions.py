@@ -8,9 +8,12 @@ matcher with the *identical I/O contract*: (words) → BIO tags. The
 downstream dataflow (span grouping per run_genre.py:77-128, marking per
 run_genre.py:203-213) is exactly the reference's.
 
-Scale notes: the tagger and span parser are Arrow-batched pandas UDFs
-keyed only on the row itself (no shuffle); the gazetteer is a broadcast
-dict; marking is a JVM-side column expression (whole-stage codegen).
+Scale notes: the tagger is a broadcast JOIN against the surface dim
+(detect_mentions_join — no Python worker, no driver-side collect);
+the gold-tag span parser is an Arrow-batched pandas UDF keyed only on
+the row itself (no shuffle); marking is a JVM-side column expression
+(whole-stage codegen). build_gazetteer/_tag_tokens are the pure-Python
+tagger the oracle runs.
 """
 
 from __future__ import annotations
@@ -108,26 +111,6 @@ def _tag_tokens(tokens: List[str], gaz) -> List[str]:
     return tags
 
 
-def gazetteer_tagger_udf(surfaces: List[str]):
-    """Deterministic stage-1 stand-in (same contract as the XLM-R
-    tagger + 5-seed vote: tokens → IOB2 boundary tags).
-
-    The gazetteer ships as a SparkContext broadcast variable — ONE
-    executor-side copy fetched on first use — never as a UDF closure
-    capture (which would pickle the whole dict into every task)."""
-    from pyspark.sql import SparkSession
-
-    sc = SparkSession.getActiveSession().sparkContext
-    bc = sc.broadcast(build_gazetteer(surfaces))
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def tag(tokens: pd.Series) -> pd.Series:
-        gaz = bc.value
-        return tokens.map(lambda t: _tag_tokens(list(t), gaz))
-
-    return tag
-
-
 # --------------------------------------------------------- span grouping
 
 def group_spans(tokens: List[str], tags: List[str]) -> List[dict]:
@@ -171,21 +154,13 @@ def group_spans_udf(tokens: pd.Series, tags: pd.Series) -> pd.Series:
     ])
 
 
-def detect_mentions(turns: DataFrame, surfaces: List[str] | None = None,
-                    tags_col: str | None = None) -> DataFrame:
-    """transcripts(+tokens) → one row per mention with marked context.
-
-    Either tag with the gazetteer (surfaces) or consume provided gold
-    tags (tags_col). Output columns: conv_id, turn_idx, entity_id,
+def detect_mentions(turns: DataFrame, tags_col: str) -> DataFrame:
+    """transcripts(+tokens) → one row per mention with marked context,
+    from provided (gold) BIO tags in `tags_col`; gazetteer tagging is
+    detect_mentions_join. Output columns: conv_id, turn_idx, entity_id,
     mention_id, text, start, end, fine_cat, general_cat, tokens,
     marked_text.
     """
-    if tags_col is None:
-        if surfaces is None:
-            raise ValueError("need surfaces or tags_col")
-        turns = turns.withColumn("tags", gazetteer_tagger_udf(surfaces)(F.col("tokens")))
-        tags_col = "tags"
-
     spans = turns.withColumn("spans", group_spans_udf(F.col("tokens"), F.col(tags_col)))
     m = (
         spans.select(
@@ -221,14 +196,32 @@ def detect_mentions(turns: DataFrame, surfaces: List[str] | None = None,
     )
 
 
+def surfaces_broadcastable(surfaces_df: DataFrame,
+                           surface_col: str = "surface",
+                           max_surfaces: int | None = None) -> bool:
+    """The detect_mentions_join broadcast decision: does the DISTINCT
+    surface count (what is actually broadcast — a duplicated-but-small
+    gazetteer must not lose the hint) stay at or below `max_surfaces`?
+    One short-circuiting limit scan, i.e. one Spark job — decide once
+    per surface dim, not per call."""
+    if max_surfaces is None:
+        max_surfaces = BROADCAST_MAX_SURFACES
+    return (
+        surfaces_df.select(surface_col).distinct()
+        .limit(max_surfaces + 1).count()
+        <= max_surfaces
+    )
+
+
 def detect_mentions_join(turns: DataFrame, surfaces_df: DataFrame,
                          surface_col: str = "surface",
                          broadcast_dim: bool | None = None,
                          broadcast_max_surfaces: int | None = None) -> DataFrame:
-    """Fully-distributed gazetteer tagging: same output as
-    detect_mentions(surfaces=...), but the surface universe stays a
-    DataFrame end-to-end — no driver-side collect, no dict broadcast.
-    This is the scale path for KB-sized gazetteers (10⁷–10⁸ surfaces).
+    """Fully-distributed gazetteer tagging: the greedy longest-match
+    tagger (_tag_tokens) + span grouping + marking, with the surface
+    universe a DataFrame end-to-end — no driver-side collect, no dict
+    broadcast, no Python worker. This is the scale path for KB-sized
+    gazetteers (10⁷–10⁸ surfaces).
 
     Plan: posexplode turn tokens → broadcast-join the surface dim on
     the first surface token (prunes to candidate starts) → verify the
@@ -241,24 +234,18 @@ def detect_mentions_join(turns: DataFrame, surfaces_df: DataFrame,
     Broadcast policy: gazetteer-sized dims join fastest broadcast, but a
     KB-sized surface set (10⁷–10⁸ rows) must NOT be force-broadcast — it
     would OOM driver and executors. `broadcast_dim=None` (default)
-    probes the DISTINCT surface count (what is actually broadcast — a
-    duplicated-but-small gazetteer must not lose the hint) with a
-    short-circuiting limit scan and hints broadcast only below
-    `broadcast_max_surfaces`; above it the join is left to
+    probes with surfaces_broadcastable, hinting broadcast only at or
+    below `broadcast_max_surfaces`; above it the join is left to
     AQE/autoBroadcastJoinThreshold (shuffle hash join on `_first_tok`
     at KB scale). The probe costs one Spark job per call — repeated
     callers should decide once and pass True/False (build_dims derives
     the decision for free via an Observation on the dim materialization
-    and run_pipeline threads it through).
+    and run_pipeline threads it through; streaming probes once before
+    the stream starts).
     """
-    if broadcast_max_surfaces is None:
-        broadcast_max_surfaces = BROADCAST_MAX_SURFACES
     if broadcast_dim is None:
-        broadcast_dim = (
-            surfaces_df.select(surface_col).distinct()
-            .limit(broadcast_max_surfaces + 1).count()
-            <= broadcast_max_surfaces
-        )
+        broadcast_dim = surfaces_broadcastable(
+            surfaces_df, surface_col, broadcast_max_surfaces)
     dim = (
         surfaces_df.select(F.split(F.col(surface_col), " ").alias("s_toks"))
         .distinct()

@@ -5,8 +5,12 @@ gazetteer tag → Q1 spans → Q2 marking → J5 candidates → scoring +
 A1 marginalization → J7 acceptance + J6 enrichment → classification →
 (subj, pred, obj) triples.
 
-Every stage takes/returns DataFrames; `run_pipeline` optionally
-checkpoints each stage for idempotent resume (checkpoints.py).
+Every stage takes/returns DataFrames. `run_pipeline` is ONE stage
+graph; materialization is a policy over its boundaries: `cut_mode`
+picks how the stage cuts are taken (localCheckpoint, parquet, or
+none), and `checkpoint_dir` makes the mentions and enriched
+boundaries durable, resumable commits (checkpoints.resume_stage) —
+same stage functions either way.
 """
 
 from __future__ import annotations
@@ -17,43 +21,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgpipe import checkpoints
-from kgpipe.candidates import attach_candidates, generate_candidates  # noqa: F401
+from kgpipe.candidates import generate_candidates
 from kgpipe.classify import classify
-from kgpipe.enrich import accept_and_enrich
+from kgpipe.enrich import acceptance_decisions, attach_predictions_and_decisions
 from kgpipe.kb import build_alias_map, build_kb_context, build_title_map
-from kgpipe.linking import link_mentions, link_mentions_fast  # noqa: F401
-from kgpipe.mentions import (  # noqa: F401
-    assert_text_equality, detect_mentions, detect_mentions_join, tokenize,
-    with_turn_order,
+from kgpipe.linking import (
+    marginalize, predictions_frame, score_hypotheses, score_hypotheses_inrow,
+)
+from kgpipe.mentions import (
+    assert_text_equality, detect_mentions_join, tokenize, with_turn_order,
 )
 from kgpipe.triples import emit_triples
 
 
-# Stage cuts skipped by default: each of these frames has exactly ONE
-# downstream consumer, so cutting it buys no re-execution protection —
-# it only adds a write+read (or checkpoint) job and a stage barrier.
-# Measured (60k turns, identical triple counts): fused runs 22.6 s vs
-# 31.9 s at local[8] and 14.6 s vs 19.1 s at local[32], with the
-# per-run job count down 61 → 51 (the serial job floor is ~0.3 s of
-# driver latency per job — the largest engine-side term in the N→4N
-# scaling gap, BENCH/BASELINE.md). The multi-consumer cuts (mentions,
-# linked, decisions, classified) stay: `decisions` fused measured
-# SLOWER (25.1 s vs 22.6 at local[8]; ~3× degradation at 32 cores in
-# r2) because the aggregation feeds a fold-back join. Pass
-# skip_cuts=() to restore a cut table at every sub-step.
-# "enriched" joined the list in r7: the map-only classifier
-# (classify._with_scores) removed the scorer fold-back join, so
-# classify is now enriched's single consumer and the cut only cost a
-# ~190 MB checkpoint write+read per run.
-SINGLE_CONSUMER_CUTS = ("candidates", "hypotheses", "ranked", "enriched")
-
-# Dictionary fan-out (max QIDs per surface) above which the linking
-# stage uses the join/groupBy/window candidate path instead of the
-# in-row merge: the in-row higher-order expressions are interpreted and
-# their per-mention cost grows with fan-out (see the decision comment
-# in run_pipeline); the join path is fan-out-insensitive (codegen'd).
-# 4 is conservative — at fan-out 4 the two probes give ≤8 in-row
-# entries, still a few interpreted evals per mention.
+# Dictionary fan-out (max distinct QIDs per surface, _max_fanout) above
+# which the linking stage uses the join/groupBy/window candidate path
+# instead of the in-row merge: the in-row higher-order expressions are
+# interpreted and their per-mention cost grows with fan-out (see the
+# decision comment in run_pipeline's link_and_enrich); the join path is
+# fan-out-insensitive (codegen'd). 4 is conservative — at fan-out 4 the
+# two probes give ≤8 in-row entries, still a few interpreted evals per
+# mention.
 IN_ROW_MAX_FANOUT = 4
 
 
@@ -69,12 +57,22 @@ def surfaces_df_from_dims(alias_map: DataFrame,
     return a.unionByName(b).distinct()
 
 
-def surfaces_from_dims(alias_map: DataFrame, mention_counts: DataFrame) -> list:
-    """Collected form of surfaces_df_from_dims — ONLY for fixture-scale
-    gazetteers (tests, the pandas-UDF tagger). The pipeline itself never
-    calls this; use surfaces_df_from_dims at KB scale."""
-    return [r["surface"]
-            for r in surfaces_df_from_dims(alias_map, mention_counts).collect()]
+def _max_fanout(mention_counts: DataFrame) -> int:
+    """Dictionary fan-out: the most DISTINCT QIDs any surface maps to —
+    the per-probe entry count the in-row candidate merge actually sees
+    (duplicate (mention, qid) dictionary rows are pre-summed there, so
+    they must not count twice here). run_pipeline runs this in a helper
+    thread; job descriptions are thread-local, so the label is set
+    here, inside that thread."""
+    sc = mention_counts.sparkSession.sparkContext
+    sc.setJobDescription("kgpipe dim:fanout")
+    try:
+        row = (mention_counts.groupBy("mention")
+               .agg(F.countDistinct("qid").alias("n"))
+               .agg(F.max("n")).collect())
+    finally:
+        sc.setJobDescription(None)
+    return (row[0][0] if row else 0) or 0
 
 
 def build_dims(spark: SparkSession, entity_kb: DataFrame, kb_args: DataFrame,
@@ -164,163 +162,125 @@ def run_pipeline(
     beam: int = 8,
     max_candidates: int = 8,
     ensemble_seeds: int = 1,
-    work_dir: str | None = None,
     dims: dict | None = None,
     cut_mode: str = "local",
-    skip_cuts: tuple = SINGLE_CONSUMER_CUTS,
     canonical_map: DataFrame | None = None,
 ) -> dict:
-    """Returns dict of stage DataFrames: turns, mentions, candidates,
-    linked, enriched, classified, triples. Pass `dims` (from
-    build_dims) to reuse prebuilt KB lookups across runs.
+    """Returns dict of stage DataFrames: turns, mentions, linked,
+    enriched, classified, triples. Pass `dims` (from build_dims) to
+    reuse prebuilt KB lookups across runs.
 
-    cut_mode (non-checkpoint path only): how stage boundaries are
-    materialized — "local" (default: localCheckpoint truncates lineage
-    without a parquet roundtrip; measured ~25% faster), "parquet"
-    (write+read — the durable-table shape; what checkpoint_dir mode
-    always uses), "none" (fully fused — measurement baseline only).
-    skip_cuts: stage names to fuse through regardless of mode.
+    The stage graph is the same under every policy: tag the turns cut
+    (detect_mentions_join), then link_and_enrich (token join →
+    hypotheses → marginalize → predictions → decisions → terminal
+    attach), classify, emit triples.
+
+    cut_mode: how stage boundaries are materialized — "local"
+    (default: localCheckpoint truncates lineage without a parquet
+    roundtrip; measured ~25% faster), "parquet" (write+read — the
+    durable-table shape), "none" (fully fused — measurement baseline
+    only).
+    checkpoint_dir: make the mentions and enriched boundaries durable
+    and resumable (checkpoints.resume_stage) instead of cuts. Mentions
+    resume keyed on (conv_id, turn_idx), so a turn appended to an
+    already-committed conversation is tagged; enriched resumes keyed on
+    mention_id. A rerun over unchanged input commits nothing.
     canonical_map: optional (qid, canonical_qid) frame (e.g. from
     canonical.canonicalize_qids over redirect_equivalence_edges) —
     applied to the accepted/link QIDs after enrichment, BEFORE
     classification features are consumed and triples are emitted
     (north_rule canonicalization step). Broadcast joins, no shuffle."""
-    # deferred dims (non-checkpoint path): build_dims resolves only the
-    # surface dim and leaves the other checkpoint jobs in flight, so
-    # the mention stage below overlaps them; _dim() blocks on a still-
-    # running future only when a later stage actually needs that dim.
+    # deferred dims: build_dims resolves only the surface dim and
+    # leaves the other checkpoint jobs in flight, so the mention stage
+    # below overlaps them; _dim() blocks on a still-running future only
+    # when a later stage actually needs that dim.
     dims = dims or build_dims(spark, entity_kb, kb_args, mention_counts,
-                              wiki_summaries=wiki_summaries,
-                              deferred=not checkpoint_dir)
+                              wiki_summaries=wiki_summaries, deferred=True)
 
     def _dim(name):
         v = dims.get(name)
         return v.result() if hasattr(v, "result") else v
 
-    surfaces_df = _dim("surfaces_df")
-    if surfaces_df is None:  # legacy dims dict with a collected list
-        surfaces_df = spark.createDataFrame(
-            [(s,) for s in dims["surfaces"]], "surface string")
-
     turns = tokenize(with_turn_order(transcripts))
     if check_invariants:
         assert_text_equality(turns)
 
-    def stage_mentions(t: DataFrame) -> DataFrame:
+    # Materialize each stage boundary (a lightweight stage cut, no
+    # resume bookkeeping). Measured far faster than any lazy/persist
+    # variant: every stage output is referenced by 2-3 downstream
+    # consumers (candidate probe, hypothesis context, fold-back join,
+    # triple branches) and Catalyst's project collapsing otherwise
+    # re-inlines the expensive candidate/hypothesis expressions per
+    # consumer; a fused linking mega-stage also degrades at high
+    # parallelism (per-task memory shrinks with concurrency at fixed
+    # heap). Default cut is localCheckpoint (~25% faster than parquet
+    # write+read).
+    from kgpipe.io import read_table, write_table
+
+    if cut_mode == "parquet":
+        import tempfile
+
+        stage_dir = tempfile.mkdtemp(prefix="kgpipe-stages-")
+
+    def cut(df: DataFrame, name: str) -> DataFrame:
+        if cut_mode == "none":
+            return df
+        # label the cut's job so UI/eventlog time attributes to the
+        # stage by name (guide §1.5); thread-local, reset after
+        spark.sparkContext.setJobDescription(f"kgpipe cut:{name}")
+        try:
+            if cut_mode == "local":
+                return df.localCheckpoint(eager=True)
+            path = os.path.join(stage_dir, name)
+            write_table(df, path)
+            return read_table(spark, path)
+        finally:
+            spark.sparkContext.setJobDescription(None)
+
+    # fan-out statistic for the candidate-path choice in
+    # link_and_enrich, computed CONCURRENTLY with the turn/mention cuts
+    # (one tiny dim aggregation; the thread overlaps its job with the
+    # stage jobs exactly like build_dims' deferred checkpoints)
+    from concurrent.futures import ThreadPoolExecutor
+
+    _fanout_pool = ThreadPoolExecutor(max_workers=1)
+    fanout_future = _fanout_pool.submit(_max_fanout, mention_counts)
+    _fanout_pool.shutdown(wait=False)
+
+    # r7 turn-level tokens: the mention cut used to materialize the
+    # turn's ~100-string token array PER MENTION (~9 mentions/turn at
+    # bench scale → the array stored 9×, the dominant bytes of the
+    # stage and of executor storage). Tokens now stay on a turn-level
+    # cut (one array per turn); the mention boundary drops them, and
+    # the hypothesis stage re-attaches them with one narrow join on
+    # (conv_id, turn_idx) that is fused into its first stage. The turns
+    # cut also dedupes the tagger's two internal scans of the turn
+    # frame (candidate explode + final span join read the same
+    # checkpoint instead of recomputing scan+order-window twice). The
+    # tagger and the token join consume ONLY (conv_id, turn_idx,
+    # tokens): mention text/marked_text are token-slice
+    # reconstructions, so the raw text column never rides the cut.
+    turns_cut = cut(turns.select("conv_id", "turn_idx", "tokens"), "turns")
+
+    def tag(t: DataFrame) -> DataFrame:
         # broadcast-JOIN tagger: the surface dim never hits the driver;
         # the broadcast decision comes from build_dims' Observation when
         # available (None → the tagger probes with one extra job)
         return detect_mentions_join(
-            t, surfaces_df, broadcast_dim=dims.get("surfaces_broadcastable"))
+            t, _dim("surfaces_df"),
+            broadcast_dim=dims.get("surfaces_broadcastable"),
+        ).drop("tokens")
 
-    def stage_link(m: DataFrame) -> DataFrame:
-        # row-based operators (broadcast joins + windows): with stage
-        # cuts in place this measured 7× faster than the all-array
-        # variant (link_mentions_fast) — Spark's interpreted
-        # higher-order-function expressions get re-inlined per consumer
-        # by project collapsing, while joins/windows stay in codegen
-        cands = generate_candidates(m, mention_counts,
-                                    max_candidates=max_candidates)
-        return link_mentions(m, cands, _dim("title_map"), beam=beam)
-
-    def stage_enrich(l: DataFrame) -> DataFrame:
-        return accept_and_enrich(l, _dim("kb_context"), wiki_summaries,
-                                 language=language,
-                                 summaries_dim=_dim("summaries_dim"))
-
-    if checkpoint_dir:
-        mentions = checkpoints.resume_stage(
-            turns.withColumn(
-                "mention_id", F.concat_ws("/", "conv_id", "turn_idx")
-            ).drop("mention_id"),
-            os.path.join(checkpoint_dir, "mentions"), "mentions", stage_mentions,
-            key="conv_id",
-        )
-        linked = checkpoints.resume_stage(
-            mentions, os.path.join(checkpoint_dir, "linked"), "linked", stage_link
-        )
-        enriched = checkpoints.resume_stage(
-            linked, os.path.join(checkpoint_dir, "enriched"), "enriched", stage_enrich
-        )
-    else:
-        # Materialize each stage boundary (a lightweight stage cut, no
-        # resume bookkeeping). Measured far faster than any lazy/persist
-        # variant: every stage output is referenced by 2-3 downstream
-        # consumers (candidate probe, hypothesis context, fold-back
-        # join, triple branches) and Catalyst's project collapsing
-        # otherwise re-inlines the expensive candidate/hypothesis
-        # expressions per consumer; a fused linking mega-stage also
-        # degrades at high parallelism (per-task memory shrinks with
-        # concurrency at fixed heap). Default cut is localCheckpoint
-        # (~25% faster than parquet write+read); the production design
-        # uses durable stage tables (checkpoint_dir path adds resume +
-        # lineage; cut_mode="parquet" gives the same shape here).
-        import tempfile
-
-        work_dir = work_dir or tempfile.mkdtemp(prefix="kgpipe-stages-")
-
-        from kgpipe.io import read_table, write_table
-
-        def cut(df: DataFrame, name: str) -> DataFrame:
-            if name in skip_cuts or cut_mode == "none":
-                return df
-            # label the cut's job so UI/eventlog time attributes to the
-            # stage by name (guide §1.5); thread-local, reset after
-            spark.sparkContext.setJobDescription(f"kgpipe cut:{name}")
-            try:
-                if cut_mode == "local":
-                    return df.localCheckpoint(eager=True)
-                path = os.path.join(work_dir, name)
-                write_table(df, path)
-                return read_table(spark, path)
-            finally:
-                spark.sparkContext.setJobDescription(None)
-
-        # r7 turn-level tokens: the mention cut used to materialize the
-        # turn's ~100-string token array PER MENTION (~9 mentions/turn
-        # at bench scale → the array stored 9×, the dominant bytes of
-        # the stage and of executor storage). Tokens now stay on a
-        # turn-level cut (one array per turn); the mention cut drops
-        # them, and the hypothesis stage re-attaches them with one
-        # narrow join on (conv_id, turn_idx) that is fused into its
-        # first stage. The turns cut also dedupes the tagger's two
-        # internal scans of the turn frame (candidate explode + final
-        # span join read the same checkpoint instead of recomputing
-        # scan+order-window twice).
-        # fan-out statistic for the candidate-path choice below,
-        # computed CONCURRENTLY with the turn/mention cuts (one tiny
-        # dim aggregation; the thread overlaps its job with the stage
-        # jobs exactly like build_dims' deferred checkpoints)
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _max_fanout():
-            row = (mention_counts.groupBy("mention")
-                   .agg(F.count(F.lit(1)).alias("n"))
-                   .agg(F.max("n")).collect())
-            return (row[0][0] if row else 0) or 0
-
-        _fanout_pool = ThreadPoolExecutor(max_workers=1)
-        fanout_future = _fanout_pool.submit(_max_fanout)
-        _fanout_pool.shutdown(wait=False)
-
-        # the tagger and the hypothesis token join consume ONLY
-        # (conv_id, turn_idx, tokens): mention text/marked_text are
-        # token-slice reconstructions, so the raw text column never
-        # needs to ride the cut
-        turns_cut = cut(
-            turns.select("conv_id", "turn_idx", "tokens"), "turns")
-        mentions = cut(stage_mentions(turns_cut).drop("tokens"), "mentions")
+    def link_and_enrich(mentions: DataFrame) -> DataFrame:
         # Linking sub-steps: candidates/hypotheses/ranked are single-
-        # consumer and fuse by default (SINGLE_CONSUMER_CUTS above).
-        # The historical anti-scaling of the fused plan (18s@8 →
-        # 166s@32 on 90k turns, r1) was root-caused in r2 to the
-        # closure-captured pandas-UDF tagger, not to fusion; with the
-        # broadcast-join tagger the fused plan is faster at every
-        # measured parallelism and saves ~10 driver jobs per run.
-        from kgpipe.linking import (
-            marginalize, predictions_frame, score_hypotheses,
-        )
-
+        # consumer, so they fuse — a cut there buys no re-execution
+        # protection and only adds a job and a stage barrier (measured,
+        # 60k turns: fused 22.6 s vs 31.9 s at local[8], 14.6 s vs
+        # 19.1 s at local[32]; the serial job floor is ~0.3 s of driver
+        # latency per job, BENCH/BASELINE.md). The historical
+        # anti-scaling of the fused plan (18s@8 → 166s@32 on 90k turns,
+        # r1) was root-caused in r2 to the closure-captured pandas-UDF
+        # tagger, not to fusion.
         # planner-default join (SMJ at scale) — NO shuffle_hash hint:
         # hash-building a partition's worth of turn TOKEN ARRAYS
         # re-creates exactly the tight-heap pathology the
@@ -329,12 +289,11 @@ def run_pipeline(
         # Tungsten SMJ sort spills compressed and GC-free). Measured
         # here too: with the hint a 2g/2-core standalone leg ground
         # >30 min inside this stage where the whole r6 leg ran ~11 min.
-        m_tok = mentions.join(
-            turns_cut.select("conv_id", "turn_idx", "tokens"),
-            ["conv_id", "turn_idx"])
+        m_tok = mentions.join(turns_cut, ["conv_id", "turn_idx"])
         # Candidate-path choice is DATA-ADAPTIVE on the dictionary's
-        # fan-out (max QIDs per surface — one tiny aggregation over the
-        # dim, the same class of statistic a broadcast threshold uses):
+        # fan-out (max distinct QIDs per surface — one tiny aggregation
+        # over the dim, the same class of statistic a broadcast
+        # threshold uses):
         #
         # - small fan-out (≤ IN_ROW_MAX_FANOUT): the in-row path
         #   (attach_candidates merge + on-row scoring,
@@ -354,22 +313,19 @@ def run_pipeline(
         #   finishes the whole pipeline in 232 s. Parallelism and
         #   codegen must come from the plan, not from per-row array
         #   programming (guide §2.5, §4).
-        fanout = fanout_future.result()
-        if fanout <= IN_ROW_MAX_FANOUT:
-            from kgpipe.linking import score_hypotheses_inrow
-
-            hyps = cut(score_hypotheses_inrow(
+        if fanout_future.result() <= IN_ROW_MAX_FANOUT:
+            hyps = score_hypotheses_inrow(
                 m_tok, mention_counts, _dim("title_map"),
-                beam=beam, max_candidates=max_candidates), "hypotheses")
+                beam=beam, max_candidates=max_candidates)
         else:
             cands = generate_candidates(mentions, mention_counts,
                                         max_candidates=max_candidates)
-            hyps = cut(score_hypotheses(cands, m_tok, _dim("title_map"),
-                                        beam=beam), "hypotheses")
+            hyps = score_hypotheses(cands, m_tok, _dim("title_map"),
+                                    beam=beam)
         # details=False: texts/scores are per-QID diagnostics nothing in
         # this pipeline reads; slim rows through the marginalize agg,
         # the rank window and the fold-back join (score bit-identical)
-        ranked = cut(marginalize(hyps, details=False), "ranked")
+        ranked = marginalize(hyps, details=False)
         # r7 slim fold-back: cut the (mention_id, genre_prediction)
         # frame, NOT the wide fold-back join output. The r6 shape
         # materialized `linked` (mention rows + predictions, ~150 MB at
@@ -382,29 +338,38 @@ def run_pipeline(
         # exchange"; equivalence: enrich.attach_predictions_and_decisions).
         preds = cut(predictions_frame(ranked), "predictions")
         # decision aggregation still cut before the terminal attach
-        # (fused, it degrades ~3× at 32 cores)
-        from kgpipe.enrich import (
-            acceptance_decisions, attach_predictions_and_decisions,
-        )
-
+        # (fused, it degrades ~3× at 32 cores because the aggregation
+        # feeds a fold-back join)
         decisions = cut(
             acceptance_decisions(preds, _dim("kb_context"), wiki_summaries,
                                  language=language,
                                  summaries_dim=_dim("summaries_dim")),
             "decisions",
         )
-        # mentions is already token-free (turn-level tokens cut above),
-        # so the terminal attach ships no token arrays
-        enriched = cut(attach_predictions_and_decisions(
-            mentions, preds, decisions), "enriched")
-        # lazy compat frame for result-dict consumers (smoke scripts);
-        # costs nothing unless evaluated
-        linked = enriched.select(
-            *[c for c in enriched.columns
-              if c not in ("accepted_qid", "accepted_lang",
-                           "wikidata_summary", "wikidata_arguments",
-                           "arg_pairs", "wikipedia_title",
-                           "wikipedia_summary", "link_qid")])
+        # mentions carry no token arrays (turn-level tokens above), so
+        # the terminal attach ships none. Not cut: classify is its
+        # single consumer (map-only classifier, r7), so a cut only cost
+        # a ~190 MB checkpoint write+read per run.
+        return attach_predictions_and_decisions(mentions, preds, decisions)
+
+    if checkpoint_dir:
+        mentions = checkpoints.resume_stage(
+            turns_cut, os.path.join(checkpoint_dir, "mentions"), "mentions",
+            tag, key=["conv_id", "turn_idx"])
+        enriched = checkpoints.resume_stage(
+            mentions, os.path.join(checkpoint_dir, "enriched"), "enriched",
+            link_and_enrich)
+    else:
+        mentions = cut(tag(turns_cut), "mentions")
+        enriched = link_and_enrich(mentions)
+    # lazy compat frame for result-dict consumers (smoke scripts);
+    # costs nothing unless evaluated
+    linked = enriched.select(
+        *[c for c in enriched.columns
+          if c not in ("accepted_qid", "accepted_lang",
+                       "wikidata_summary", "wikidata_arguments",
+                       "arg_pairs", "wikipedia_title",
+                       "wikipedia_summary", "link_qid")])
 
     if canonical_map is not None:
         from kgpipe.canonical import apply_canonicalization
@@ -418,15 +383,11 @@ def run_pipeline(
         classified = classify_ensemble(enriched, n_variants=ensemble_seeds)
     else:
         classified = classify(enriched)
-    if not checkpoint_dir:
-        classified = cut(classified, "classified")
-        was_cut = cut_mode != "none" and "classified" not in skip_cuts
-        # if the classified frame is materialized (parquet/localCheckpoint)
-        # the two triple branches read it cheaply; otherwise let
-        # emit_triples persist its slim projection
-        triples = emit_triples(classified, materialize=not was_cut)
-    else:
-        triples = emit_triples(classified)
+    classified = cut(classified, "classified")
+    # if the classified frame is materialized (parquet/localCheckpoint)
+    # the two triple branches read it cheaply; otherwise let
+    # emit_triples persist its slim projection
+    triples = emit_triples(classified, materialize=cut_mode == "none")
     return {
         "turns": turns,
         "mentions": mentions,

@@ -63,7 +63,12 @@ def _dot_u(a, b, dim: int):
     (measured: q29 DataFrame build 1.3 s → 0.2 s). The parsed tree is
     the same left-associative addition chain (`+` is left-assoc, `*`
     binds tighter; the leading literal constant-folds to the same
-    double 0.0), so results stay bit-identical — property-tested."""
+    double 0.0), so results stay bit-identical — property-tested.
+
+    dim <= 0 is the empty sum 0.0 on both paths (infer_dim gives 0 for
+    an empty first vector)."""
+    if dim <= 0:
+        return F.lit(0.0)
     if isinstance(a, str) and isinstance(b, str):
         terms = " + ".join(
             f"CAST(get({a}, {i}) AS DOUBLE) * CAST(get({b}, {i}) AS DOUBLE)"

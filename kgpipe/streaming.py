@@ -46,24 +46,32 @@ def turn_rate_metrics(turns: DataFrame, window: str = "5 minutes") -> DataFrame:
     )
 
 
-def incremental_mentions(turns: DataFrame, surfaces, checkpoint_dir: str,
-                         out_path: str):
+def incremental_mentions(turns: DataFrame, surfaces_df: DataFrame,
+                         checkpoint_dir: str, out_path: str):
     """Micro-batch incremental mention detection: each batch runs the
-    batch operator (same code path as the pipeline) and writes to the
-    mentions table. foreachBatch is only at-least-once, so the write
-    must be idempotent per batch_id to get exactly-once *effects*: each
-    batch overwrites its own `batch_id=N` subdirectory, so a micro-batch
-    retried after a partial write replaces it instead of duplicating
-    rows. Readers see batch_id as a partition column of out_path.
-    Returns the StreamingQuery (caller awaits/stops)."""
+    batch pipeline's tagger (detect_mentions_join over the surfaces
+    DataFrame — no collected gazetteer, no Python worker) and writes to
+    the mentions table. The broadcast decision is taken ONCE, before
+    the stream starts, not probed per micro-batch. foreachBatch is only
+    at-least-once, so the write must be idempotent per batch_id to get
+    exactly-once *effects*: each batch overwrites its own `batch_id=N`
+    subdirectory, so a micro-batch retried after a partial write
+    replaces it instead of duplicating rows. Readers see batch_id as a
+    partition column of out_path. Returns the StreamingQuery (caller
+    awaits/stops)."""
     import os
 
-    from kgpipe.mentions import detect_mentions, tokenize
+    from kgpipe.mentions import (
+        detect_mentions_join, surfaces_broadcastable, tokenize,
+    )
+
+    broadcast_dim = surfaces_broadcastable(surfaces_df)
 
     def process(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
             return
-        m = detect_mentions(tokenize(batch_df), surfaces=surfaces)
+        m = detect_mentions_join(tokenize(batch_df), surfaces_df,
+                                 broadcast_dim=broadcast_dim)
         m.write.mode("overwrite").parquet(
             os.path.join(out_path, f"batch_id={batch_id}")
         )

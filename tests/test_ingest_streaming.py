@@ -2,6 +2,7 @@
 and streaming ingestion."""
 
 import json
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -14,6 +15,8 @@ from kgpipe.ingest import (
     write_sentence_json,
 )
 from kgpipe import streaming
+
+DATA = Path(__file__).resolve().parent / "data"
 
 
 def test_read_conll_reference_example(spark, tmp_path):
@@ -41,7 +44,9 @@ def test_read_conll_reference_example(spark, tmp_path):
 
 
 def test_conll_roundtrip_real_reference_file(spark):
-    path = "/root/reference/data_examples/entity_boundary.conll"
+    # hand-authored in the shape of the reference's
+    # data_examples/entity_boundary.conll
+    path = str(DATA / "entity_boundary.conll")
     df = read_conll(spark, path)
     rows = {r["sentence_id"]: r for r in df.collect()}
     assert rows[0]["words"][:2] == ["eli", "lilly"]
@@ -50,7 +55,9 @@ def test_conll_roundtrip_real_reference_file(spark):
 
 
 def test_sentence_json_roundtrip(spark, tmp_path):
-    src = "/root/reference/data_examples/context-enriched.json"
+    # hand-authored in the shape of the reference's
+    # data_examples/context-enriched.json
+    src = str(DATA / "context-enriched.json")
     df = read_sentence_json(spark, src)
     assert df.count() >= 2
     r0 = df.filter((F.col("sentence_id") == 0) & (F.col("entity_id") == 0)) \
@@ -124,8 +131,9 @@ def test_streaming_dedup_and_incremental_mentions(spark, tmp_path):
 
     turns = streaming.read_transcript_stream(spark, src)
     out = str(tmp_path / "mentions_out")
+    surfaces = spark.createDataFrame([("eli lilly",)], "surface string")
     q = streaming.incremental_mentions(
-        turns, ["eli lilly"], str(tmp_path / "ck"), out
+        turns, surfaces, str(tmp_path / "ck"), out
     )
     q.awaitTermination(120)
     got = spark.read.parquet(out)

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from kgpipe import schemas
 from kgpipe.candidates import generate_candidates
 from kgpipe.classify import majority_vote
-from kgpipe.enrich import accept_and_enrich
+from kgpipe.enrich import acceptance_decisions, attach_decisions
 from kgpipe.kb import build_kb_context
 from kgpipe.linking import marginalize
 
@@ -78,6 +78,12 @@ def _enrich_fixture(spark):
     return ctx, summaries
 
 
+def _accept(linked, ctx, summaries, language):
+    """Acceptance + enrichment of a linked frame, one row per mention."""
+    return attach_decisions(
+        linked, acceptance_decisions(linked, ctx, summaries, language))
+
+
 def test_acceptance_rank_order_and_disambig_skip(spark):
     ctx, summaries = _enrich_fixture(spark)
     linked = spark.createDataFrame(
@@ -87,7 +93,7 @@ def test_acceptance_rank_order_and_disambig_skip(spark):
         "mention_id string, genre_prediction array<string>",
     )
     out = {r["mention_id"]: r
-           for r in accept_and_enrich(linked, ctx, summaries, "en").collect()}
+           for r in _accept(linked, ctx, summaries, "en").collect()}
     m1 = out["m1"]
     assert m1["link_qid"] == "Q1" and m1["accepted_lang"] == "en"
     assert m1["wikidata_summary"] == "politician d"
@@ -111,7 +117,7 @@ def test_acceptance_en_fallback(spark):
         "mention_id string, genre_prediction array<string>",
     )
     out = {r["mention_id"]: r
-           for r in accept_and_enrich(linked, ctx, summaries, "de").collect()}
+           for r in _accept(linked, ctx, summaries, "de").collect()}
     # Q1 has de coverage → accepted in de, arguments use de labels
     m1 = out["m1"]
     assert m1["accepted_lang"] == "de" and m1["wikidata_summary"] == "pol d"
@@ -126,7 +132,7 @@ def test_en_fallback_when_requested_lang_uncovered(spark):
         [("m1", ["Q1"])], "mention_id string, genre_prediction array<string>"
     )
     # fr never covered; Q1 has en → EN fallback (get_wikidata.py:192-201)
-    out = accept_and_enrich(linked, ctx, summaries, "fr").collect()[0]
+    out = _accept(linked, ctx, summaries, "fr").collect()[0]
     assert out["accepted_lang"] == "en" and out["link_qid"] == "Q1"
 
 

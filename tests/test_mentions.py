@@ -9,10 +9,15 @@ from kgpipe.mentions import (
     _tag_tokens,
     build_gazetteer,
     detect_mentions,
+    detect_mentions_join,
     group_spans,
     tokenize,
     with_turn_order,
 )
+
+
+def _surfaces(spark, surfaces):
+    return spark.createDataFrame([(s,) for s in surfaces], "surface string")
 
 
 def test_group_spans_reference_semantics():
@@ -74,7 +79,7 @@ def test_detect_mentions_marking(spark):
              datetime(2026, 1, 1))]
     df = tokenize(with_turn_order(
         spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)))
-    m = detect_mentions(df, surfaces=["eli lilly"]).collect()
+    m = detect_mentions_join(df, _surfaces(spark, ["eli lilly"])).collect()
     assert len(m) == 1
     r = m[0]
     assert (r["text"], r["start"], r["end"]) == ("eli lilly", 1, 3)
@@ -87,7 +92,7 @@ def test_mention_at_start_and_end(spark):
              datetime(2026, 1, 1))]
     df = tokenize(with_turn_order(
         spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)))
-    m = (detect_mentions(df, surfaces=["eli lilly", "iker"])
+    m = (detect_mentions_join(df, _surfaces(spark, ["eli lilly", "iker"]))
          .orderBy("entity_id").collect())
     assert [(r["start"], r["end"]) for r in m] == [(0, 2), (4, 5)]
     assert m[0]["marked_text"].startswith("[START] eli lilly [END]")
@@ -102,10 +107,9 @@ def test_text_equality_invariant(spark, fixture_set):
 
 def test_detect_mentions_join_equivalence(spark):
     """The distributed broadcast-join tagger must produce exactly the
-    pandas-UDF gazetteer tagger's mention rows (greedy longest-match,
-    overlaps, adjacency, enumeration order)."""
-    from kgpipe.mentions import detect_mentions_join
-
+    mention rows of the pure-Python greedy longest-match tagger
+    (_tag_tokens, the oracle's) fed through the gold-tag path
+    (overlaps, adjacency, enumeration order)."""
     surfaces = ["eli lilly", "eli", "new york", "iker", "york city hall"]
     rows = [
         ("c1", 0, "user", "eli lilly and eli met in new york", None,
@@ -119,23 +123,27 @@ def test_detect_mentions_join_equivalence(spark):
     ]
     df = tokenize(with_turn_order(
         spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)))
+    gaz = build_gazetteer(surfaces)
+    tags = spark.createDataFrame(
+        [(c, t, _tag_tokens(text.split(" "), gaz)) for c, t, _, text, _, _
+         in rows],
+        "conv_id string, turn_idx int, tags array<string>")
     cols = ["conv_id", "turn_idx", "entity_id", "mention_id", "text",
             "start", "end", "fine_cat", "general_cat", "marked_text"]
-    udf_out = [tuple(r) for r in detect_mentions(df, surfaces=surfaces)
+    ref_out = [tuple(r) for r in
+               detect_mentions(df.join(tags, ["conv_id", "turn_idx"]), "tags")
                .select(*cols).orderBy("mention_id").collect()]
-    surf_df = spark.createDataFrame([(s,) for s in surfaces], "surface string")
-    join_out = [tuple(r) for r in detect_mentions_join(df, surf_df)
+    join_out = [tuple(r) for r in
+                detect_mentions_join(df, _surfaces(spark, surfaces))
                 .select(*cols).orderBy("mention_id").collect()]
-    assert udf_out == join_out
-    assert len(udf_out) >= 6
+    assert ref_out == join_out
+    assert len(ref_out) >= 6
 
 
 def test_detect_mentions_join_broadcast_gate(spark):
     """The surface dim is only broadcast-hinted below the gate; forcing
     broadcast_dim=False (the KB-scale path: AQE decides) must produce
     identical mentions."""
-    from kgpipe.mentions import detect_mentions_join, tokenize, with_turn_order
-
     df = tokenize(with_turn_order(spark.createDataFrame(
         [("c1", 0, "user", "barack obama met angela merkel", None, None)],
         "conv_id string, turn_idx int, role string, text string,"

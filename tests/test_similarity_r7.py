@@ -27,23 +27,28 @@ def _emb(spark, n=60, dim=7, seed=11):
 def test_unrolled_dot_norm_bit_identical(spark):
     """dot_expr/norm_expr with a known dim are the same IEEE addition
     chain as the aggregate fold — equality must be exact (==), not
-    approximate."""
-    emb = _emb(spark, n=40, dim=9)
-    dim = infer_dim(emb)
-    assert dim == 9
-    pairs = (emb.alias("l").crossJoin(emb.alias("r"))
-             .select(F.col("l.embedding").alias("a"),
-                     F.col("r.embedding").alias("b")))
-    rows = pairs.select(
-        _dot(F.col("a"), F.col("b")).alias("fold"),
-        dot_expr(F.col("a"), F.col("b"), dim).alias("unrolled"),
-        _norm(F.col("a")).alias("nfold"),
-        norm_expr(F.col("a"), dim).alias("nunrolled"),
-    ).collect()
-    assert rows
-    for r in rows:
-        assert r["fold"] == r["unrolled"]
-        assert r["nfold"] == r["nunrolled"]
+    approximate. Both forms (Columns and SQL-name strings) are checked,
+    including dim=0 (empty vectors: the empty sum 0.0, not a parse
+    error)."""
+    for n_dim in (9, 0):
+        emb = _emb(spark, n=40, dim=n_dim)
+        dim = infer_dim(emb)
+        assert dim == n_dim
+        pairs = (emb.alias("l").crossJoin(emb.alias("r"))
+                 .select(F.col("l.embedding").alias("a"),
+                         F.col("r.embedding").alias("b")))
+        rows = pairs.select(
+            _dot(F.col("a"), F.col("b")).alias("fold"),
+            dot_expr(F.col("a"), F.col("b"), dim).alias("unrolled"),
+            dot_expr("a", "b", dim).alias("unrolled_sql"),
+            _norm(F.col("a")).alias("nfold"),
+            norm_expr(F.col("a"), dim).alias("nunrolled"),
+            norm_expr("a", dim).alias("nunrolled_sql"),
+        ).collect()
+        assert rows
+        for r in rows:
+            assert r["fold"] == r["unrolled"] == r["unrolled_sql"]
+            assert r["nfold"] == r["nunrolled"] == r["nunrolled_sql"]
 
 
 def test_lsh_cosine_verify_matches_pair_join_shape(spark):
